@@ -51,6 +51,16 @@ object ConnectedComponents {
     *         converges in ~20 rounds, not 100k.
     */
   def byMinLabel(edges: DataFrame, maxIter: Int = 25): DataFrame = {
+    val spark = edges.sparkSession
+    // spark.graft.cc.roundMode: "auto" (default — broadcast rounds when
+    // the measured labels bytes fit the broadcast threshold) or
+    // "shuffle" (force the pre-r16 lazy-union rounds; the A/B arm and
+    // the escape hatch for a host where the 2|E|-row cache is unwelcome).
+    // Checked before any job, so a typo fails instead of acting as auto.
+    val mode = spark.conf.getOption("spark.graft.cc.roundMode")
+      .map(_.trim.toLowerCase).getOrElse("auto")
+    require(mode == "auto" || mode == "shuffle",
+      s"spark.graft.cc.roundMode must be auto or shuffle, got '$mode'")
     val e = edges.toDF("src", "dst")
     // symmetric closure once. localCheckpoint (eager) MATERIALIZES and
     // TRUNCATES lineage — essential for any iterative dataflow: with
@@ -74,7 +84,6 @@ object ConnectedComponents {
       .select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))
       .localCheckpoint(true)
-    val spark = e.sparkSession
     // Closed neighborhood as self-loops IN the edge relation: the round
     // below used to union a separate `labels` branch into the groupBy
     // to keep each vertex's own label in the min — a |V|-row exchange
@@ -90,12 +99,6 @@ object ConnectedComponents {
     val ckBytes = storedBytes(ck)
     val labelsBytes = storedBytes(labels)
     val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    // spark.graft.cc.roundMode: "auto" (default — broadcast rounds when
-    // the measured labels bytes fit the broadcast threshold) or
-    // "shuffle" (force the pre-r16 lazy-union rounds; the A/B arm and
-    // the escape hatch for a host where the 2|E|-row cache is unwelcome)
-    val mode = spark.conf.getOption("spark.graft.cc.roundMode")
-      .map(_.trim.toLowerCase).getOrElse("auto")
     val broadcastRounds = mode != "shuffle" &&
       labelsBytes.exists(b => b > 0 && b <= threshold) && threshold > 0
     // Broadcast regime (labels measured under the broadcast threshold —
@@ -151,64 +154,66 @@ object ConnectedComponents {
     var prevSum: Option[java.math.BigDecimal] = None
     var converged = false
     var it = 0
-    while (!converged && it < maxIter) {
-      // candidate label per vertex: min over its own label and every
-      // neighbor's label
-      // The broadcast hint is backed by the MEASURED labels bytes above,
-      // so it can never bake an unbounded broadcast into the plan; in
-      // the shuffle regime the planner keeps its own choice.
-      val labelsSide =
-        if (broadcastRounds) broadcast(labels) else labels
-      val viaNeighbors = sym
-        .join(labelsSide.withColumnRenamed("id", "dst"), Seq("dst"))
-        .select(col("src").as("id"), col("component"))
-      // Pointer jumping (label-of-label) from round 4 on: near-clique
-      // dedup graphs reach fixpoint in ≤ 2 rounds + 1 probe round, so
-      // they never pay the extra join; a long-diameter graph doubles its
-      // propagated distance every round from here (O(log d) total rounds
-      // instead of O(d)).
-      val viaPointer =
-        if (it < 3) None
-        else Some(
-          labels.alias("a")
-            .join(labelsSide.alias("b"), col("a.component") === col("b.id"))
-            .select(col("a.id"), col("b.component").as("component")))
-      // LAZY checkpoint on the numeric path: the convergence probe right
-      // below is a full-scan aggregate over this frame, so it is the
-      // action that materializes the checkpoint blocks — one job per
-      // round instead of two (eager-checkpoint job + probe job), and the
-      // probe no longer pays a second read pass over the stored blocks.
-      // Lineage is truncated at plan-build time either way (the frame is
-      // LogicalRDD-backed from construction), which is what the
-      // "plan must not grow with iterations" note above actually needs.
-      // The non-numeric fallback keeps the eager checkpoint: its join
-      // probe is limit(1)-short-circuited and may scan only some
-      // partitions, which would leave the checkpoint partially
-      // materialized for the next round's three consumers.
-      val next = (viaNeighbors +: viaPointer.toSeq)
-        .reduce(_ union _)
-        .groupBy("id")
-        .agg(min("component").as("component"))
-        .localCheckpoint(eager = !numericIds)
-      if (numericIds) {
-        val s = next
-          .agg(sum(col("component").cast("decimal(38,0)")))
-          .first().getDecimal(0)
-        converged = prevSum.contains(s)
-        prevSum = Some(s)
-      } else {
-        converged = next.alias("n")
-          .join(labels.alias("p"), Seq("id"))
-          .filter(col("n.component") =!= col("p.component"))
-          .limit(1).count() == 0
-      }
-      labels = next
-      it += 1
-    }
     // The returned labels frame is a fully materialized checkpoint (the
-    // last probe ran over it), so the cached union is dead weight from
-    // here — release it rather than hold 2|E| rows for the app lifetime.
-    if (broadcastRounds) sym.unpersist(false)
+    // last probe ran over it), so the cached union is dead weight once the
+    // rounds end, however they end — release it rather than hold 2|E|
+    // rows for the app lifetime.
+    try {
+      while (!converged && it < maxIter) {
+        // candidate label per vertex: min over its own label and every
+        // neighbor's label
+        // The broadcast hint is backed by the MEASURED labels bytes above,
+        // so it can never bake an unbounded broadcast into the plan; in
+        // the shuffle regime the planner keeps its own choice.
+        val labelsSide =
+          if (broadcastRounds) broadcast(labels) else labels
+        val viaNeighbors = sym
+          .join(labelsSide.withColumnRenamed("id", "dst"), Seq("dst"))
+          .select(col("src").as("id"), col("component"))
+        // Pointer jumping (label-of-label) from round 4 on: near-clique
+        // dedup graphs reach fixpoint in ≤ 2 rounds + 1 probe round, so
+        // they never pay the extra join; a long-diameter graph doubles its
+        // propagated distance every round from here (O(log d) total rounds
+        // instead of O(d)).
+        val viaPointer =
+          if (it < 3) None
+          else Some(
+            labels.alias("a")
+              .join(labelsSide.alias("b"), col("a.component") === col("b.id"))
+              .select(col("a.id"), col("b.component").as("component")))
+        // LAZY checkpoint on the numeric path: the convergence probe right
+        // below is a full-scan aggregate over this frame, so it is the
+        // action that materializes the checkpoint blocks — one job per
+        // round instead of two (eager-checkpoint job + probe job), and the
+        // probe no longer pays a second read pass over the stored blocks.
+        // Lineage is truncated at plan-build time either way (the frame is
+        // LogicalRDD-backed from construction), which is what the
+        // "plan must not grow with iterations" note above actually needs.
+        // The non-numeric fallback keeps the eager checkpoint: its join
+        // probe is limit(1)-short-circuited and may scan only some
+        // partitions, which would leave the checkpoint partially
+        // materialized for the next round's three consumers.
+        val next = (viaNeighbors +: viaPointer.toSeq)
+          .reduce(_ union _)
+          .groupBy("id")
+          .agg(min("component").as("component"))
+          .localCheckpoint(eager = !numericIds)
+        if (numericIds) {
+          val s = next
+            .agg(sum(col("component").cast("decimal(38,0)")))
+            .first().getDecimal(0)
+          converged = prevSum.contains(s)
+          prevSum = Some(s)
+        } else {
+          converged = next.alias("n")
+            .join(labels.alias("p"), Seq("id"))
+            .filter(col("n.component") =!= col("p.component"))
+            .limit(1).count() == 0
+        }
+        labels = next
+        it += 1
+      }
+    } finally if (broadcastRounds) sym.unpersist(false)
     // Non-convergence means labels are still mid-propagation: components
     // are SPLIT and downstream survivor selection would silently keep
     // duplicates. Fail loudly rather than return wrong labels.

@@ -39,13 +39,9 @@ object CandyRun {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val result = CandyPipeline.fromConfig(spark, cfg).run()
-    println(s"order_line_items: ${result.orderLineItems.count()} rows")
-    println(s"products_updated: ${result.productsUpdated.count()} rows")
-    println(s"orders:           ${result.orders.count()} rows")
-    println(s"daily_summary:    ${result.dailySummary.count()} rows")
-    println(s"forecast:         ${result.forecast.count()} rows")
-    println(s"cancelled lines:  ${result.cancelledLines}")
+    val result = new CandyPipeline(spark, cfg).run()
+    result.reports.foreach(p => println(s"wrote $p"))
+    println(s"cancelled lines: ${result.cancelledLines}")
     spark.stop()
   }
 }

@@ -105,6 +105,39 @@ class PipelineOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(ex.getMessage.contains("did not converge"))
   }
 
+  test("connected components: an unknown roundMode is rejected, naming the allowed values") {
+    spark.conf.set("spark.graft.cc.roundMode", "shufle")
+    try {
+      val ex = intercept[IllegalArgumentException] {
+        ConnectedComponents.byMinLabel(Seq((1L, 2L)).toDF("src", "dst"))
+      }
+      assert(ex.getMessage.contains("auto or shuffle") && ex.getMessage.contains("shufle"))
+    } finally spark.conf.unset("spark.graft.cc.roundMode")
+  }
+
+  test("connected components: a round that fails releases the round cache") {
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val cancelled = new java.util.concurrent.atomic.AtomicInteger
+    // cancel every job that starts once the broadcast-regime round cache
+    // is registered, so the failure lands inside the round loop
+    val canceller = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!spark.sharedState.cacheManager.isEmpty) {
+          cancelled.incrementAndGet()
+          sc.cancelJob(e.jobId)
+        }
+    }
+    val edges = (1L until 300L).map(i => (i, i + 1)).toDF("src", "dst")
+    sc.addSparkListener(canceller)
+    val ex =
+      try intercept[Exception](ConnectedComponents.byMinLabel(edges))
+      finally sc.removeSparkListener(canceller)
+    assert(cancelled.get > 0)
+    assert(ex.getMessage.toLowerCase.contains("cancel"), ex.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty, "round cache left behind")
+  }
+
   test("asof backward: all carried values come from the SAME winning right row") {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val left = Seq((1L, 10L, ts("2024-01-01 10:00:00"))).toDF("event_id", "user_id", "ts")

@@ -5,23 +5,24 @@ import graft.model.CandyModel
 import graft.pipeline.{CandyConfig, CandyPipeline}
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import java.sql.DriverManager
-import java.time.LocalDate
 
 /** The real `format("jdbc")` code path (reference data_processor.py:87-101),
   * exercised against an embedded Apache Derby database — the same Spark
   * JDBC source a production MySQL deployment hits, minus only the driver
   * class (configurable, like the reference's `.env` surface).
   *
-  * The database is populated from the reference's dataset_5 dimension
-  * CSVs, so JDBC-loaded dimensions must match the CSV-fixture source
-  * exactly, and the full pipeline must still hit its deterministic
-  * golden when dimensions come from JDBC.
+  * The database is populated from the in-repo dimension CSVs
+  * (`src/test/resources/candy_input`), so JDBC-loaded dimensions must
+  * match the CSV-fixture source exactly, and the full pipeline must still
+  * hit its deterministic golden byte for byte when dimensions come from
+  * JDBC.
   */
 class JdbcSourcesSpec extends AnyFunSuite with SparkTestBase {
 
-  private val dataDir = "/root/reference/data/dataset_5"
+  private val dataDir = "src/test/resources/candy_input"
 
   private lazy val dbUrl: String = {
     val home = Files.createTempDirectory("derby_home").toFile
@@ -102,24 +103,17 @@ class JdbcSourcesSpec extends AnyFunSuite with SparkTestBase {
     assert(plan.contains("JDBCRelation"), s"plan was:\n$plan")
   }
 
-  test("golden e2e with JDBC dimensions: order_line_items + products_updated exact") {
+  test("golden e2e with JDBC dimensions: all four reports byte-exact") {
     val outDir = Files.createTempDirectory("candy_jdbc_out").toFile
     outDir.deleteOnExit()
-    val result = new CandyPipeline(
-      spark, dataDir, outDir.getAbsolutePath,
-      LocalDate.of(2024, 2, 1), LocalDate.of(2024, 2, 10),
-      dimConfig = Some(cfg)).run()
-    assert(result.cancelledLines == 122)
+    val result = new CandyPipeline(spark, cfg.copy(outputPath = outDir.getAbsolutePath)).run()
+    assert(result.cancelledLines == 135)
+    def text(path: String) =
+      new String(Files.readAllBytes(Paths.get(path)), UTF_8).replace("\r\n", "\n")
     for (file <- Seq("order_line_items.csv", "products_updated.csv",
         "orders.csv", "daily_summary.csv")) {
-      val golden = spark.read.option("header", "true")
-        .csv(s"src/test/resources/candy_expected/$file").collect()
-        .map(_.toSeq.map(String.valueOf).mkString(""))
-      val actual = spark.read.option("header", "true")
-        .csv(s"${outDir.getAbsolutePath}/$file").collect()
-        .map(_.toSeq.map(String.valueOf).mkString(""))
-      assert(actual.length == golden.length, s"$file row count")
-      assert(actual.sameElements(golden), s"$file content deviates")
+      assert(text(s"${outDir.getAbsolutePath}/$file") ==
+        text(s"src/test/resources/candy_expected/$file"), s"$file deviates")
     }
   }
 
