@@ -101,7 +101,7 @@ object BenchHarness {
 
   /** A/B aid, now available to EVERY main: `SPARK_GRAFT_SQLCONF=
     * "k=v;k=v"` applies runtime SQL confs (e.g.
-    * `spark.graft.exactSubstr.markViaAgg=true`) before any timing.
+    * `spark.graft.exactSubstr.passes=4`) before any timing.
     * Segments without '=' (or empty, e.g. a trailing ';') are skipped
     * rather than MatchError-ing the run at startup.
     */

@@ -8,13 +8,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * {{{ sbt "runMain graft.model.BpeMergesTrainer" }}}
   *
-  * Trains [[graft.operators.Bpe.train]] on the UNION of the sf0.01
-  * documents word-frequency table (so the sf corpora keep full merge
-  * coverage) and [[syntheticVocab]] — a deterministic mixed-alphabet
-  * vocabulary sized to sustain a production-shaped merge count
-  * (`SPARK_GRAFT_BPE_MERGES`, default 8000; the r12 fixture's 96
-  * [a-z]-corpus merges exercised 3 fold chunks and a ~100-token id
-  * space, far below the advertised tens-of-thousands-of-rules shape).
+  * Trains [[graft.operators.Bpe.trainInMemory]] on the UNION of the
+  * sf0.01 documents word-frequency table (so the sf corpora keep full
+  * merge coverage) and [[syntheticVocab]] — a deterministic
+  * mixed-alphabet vocabulary sized to sustain a production-shaped merge
+  * count (`SPARK_GRAFT_BPE_MERGES`, default 8000; the r12 fixture's 96
+  * [a-z]-corpus merges gave a ~100-token id space, far below the
+  * advertised tens-of-thousands-of-rules shape).
   * minFreq 2, ties on (l, r) code-point order — fully deterministic, no
   * seed dependence beyond the fixed generator constants. Writes
   * `/graft/bpe_merges.csv` (one `l,r` line per merge, training order).
@@ -84,9 +84,7 @@ object BpeMergesTrainer {
       .unionByName(syntheticVocab(spark))
       .groupBy("w").agg(org.apache.spark.sql.functions.sum("freq").as("freq"))
     // the word-frequency table is dictionary-sized (Zipf) — collect it
-    // once (bounded by construction) and train in memory; Bpe.train's
-    // one-Spark-job-per-merge shape costs ~0.6 s/rule, an hour at 8k
-    // rules, and is only needed when the VOCABULARY outgrows a machine
+    // once (bounded by construction) and train in memory
     import spark.implicits._
     val words = vocab.as[(String, Long)].collect().toSeq
     System.err.println(s"[bpe-trainer] vocabulary: ${words.size} distinct words")

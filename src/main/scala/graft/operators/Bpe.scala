@@ -1,19 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Byte-pair-encoding tokenizer training (Sennrich et al. 2016), the way
-  * it actually scales: every iteration runs on the WORD-FREQUENCY table,
-  * not the corpus. Zipf's law makes that table vocabulary-sized — a
-  * 100 TB corpus compresses to a few million (word, freq) rows in one
-  * combinable aggregation, after which each merge iteration is one tiny
-  * pair-count aggregation plus one map over the vocab frame.
-  *
-  * The only driver-side data is ONE row per iteration (the argmax pair) —
-  * the same bounded-by-construction pattern as the IVF quantizer sample.
-  * The merge application itself is a pure Catalyst `aggregate` HOF fold:
-  * no UDF, no collect of the vocabulary.
+/** Byte-pair-encoding tokenizer (Sennrich et al. 2016), the way it
+  * actually scales: training runs on the WORD-FREQUENCY table, not the
+  * corpus. Zipf's law makes that table vocabulary-sized — a 100 TB
+  * corpus compresses to a few million (word, freq) rows in one
+  * combinable aggregation ([[wordFreq]]), which [[trainInMemory]]
+  * collects once and trains incrementally. Encoding under a frozen
+  * merge table segments each DISTINCT word once ([[segmentWordFast]])
+  * and joins the dictionary back to the corpus ([[encode]]).
   *
   * Matches the reference algorithm exactly: merges apply left-to-right,
   * non-overlapping (after `a b → ab` in `a b b`, the remaining `b` does
@@ -32,9 +29,8 @@ object Bpe {
     * out-of-vocabulary input and [[decode]]∘[[encode]] is lossless on
     * ANY text, supplementary planes included: the unit is the CODE
     * POINT, never a UTF-16 unit, so an emoji decomposes into its 4
-    * UTF-8 byte tokens — exactly what [[baseSymsCol]]'s `substr`
-    * spelling (UTF8String indexes code points) and the DuckDB oracle
-    * emit. Iterating Chars here instead would hand each surrogate half
+    * UTF-8 byte tokens — exactly what the DuckDB oracle emits.
+    * Iterating Chars here instead would hand each surrogate half
     * to `getBytes` alone, which encodes it as `?` (0x3F) — silent
     * corruption with n_oov = 0 (the r14 ADVICE find).
     */
@@ -58,31 +54,6 @@ object Bpe {
     out.result()
   }
 
-  /** The Catalyst spelling of [[charSyms]]+`</w>` over a text column —
-    * shared by [[train]]'s symbol init and [[segment]]'s base (one
-    * decomposition, every consumer): per character, alphabet members
-    * pass through, others expand to `<0xNN>` tokens via
-    * `hex(encode(c, 'UTF-8'))` split into pairs. Spark's `hex` renders
-    * uppercase, matching [[graft.model.BpeMerges.byteToken]].
-    */
-  private[operators] def baseSymsCol(text: Column): Column = {
-    val alphaLit = typedlit(graft.model.BpeMerges.baseAlphabet)
-    val chars = transform(
-      sequence(lit(1), length(text)), i => text.substr(i, lit(1)))
-    val decomposed = flatten(transform(chars, c => {
-      val h = hex(org.apache.spark.sql.functions.encode(c, "UTF-8"))
-      when(array_contains(alphaLit, c), array(c))
-        .otherwise(transform(
-          sequence(lit(1), (length(h) / 2).cast("int")),
-          j => concat(lit("<0x"), h.substr(j * 2 - 1, lit(2)), lit(">"))))
-    }))
-    // sequence(1, 0) would count DOWN ([1, 0]); empty text gets just
-    // the marker
-    when(length(text) === 0, array(lit(graft.model.BpeMerges.endWord)))
-      .otherwise(concat(
-        decomposed, array(lit(graft.model.BpeMerges.endWord))))
-  }
-
   /** Word-frequency table for a text column: one combinable agg pass. */
   def wordFreq(corpus: DataFrame, textCol: String): DataFrame =
     corpus
@@ -91,52 +62,8 @@ object Bpe {
       .groupBy(col("w"))
       .agg(count(lit(1)).as("freq"))
 
-  /** Train `numMerges` BPE merge rules over a (w, freq) vocabulary frame.
-    * Returns the merges in training order. Stops early when no pair
-    * occurs at least `minFreq` times.
-    */
-  def train(
-      vocab: DataFrame,
-      numMerges: Int,
-      minFreq: Long = 2L): Seq[(String, String)] = {
-    var syms = vocab
-      .select(
-        baseSymsCol(col("w")).as("syms"),
-        col("freq").cast("long").as("freq"))
-      .localCheckpoint(true)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var done = false
-    var it = 0
-    while (it < numMerges && !done) {
-      // tie-break order is (l, r) in Spark's UTF8String comparison =
-      // UTF-8 byte order = Unicode CODE POINT order. Symbols can only
-      // be base-alphabet (BMP) characters, `<0xNN>` byte tokens, or
-      // concatenations thereof — non-BMP code points byte-decompose on
-      // the way in — so Java String order coincides; the spec's
-      // independent reference implementation still ties on code points
-      // to keep the invariant explicit rather than incidental.
-      val top = pairCounts(syms)
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1)
-        .collect() // exactly one row — the argmax merge rule
-      if (top.isEmpty || top(0).getLong(2) < minFreq) done = true
-      else {
-        val (a, b) = (top(0).getString(0), top(0).getString(1))
-        merges += ((a, b))
-        val old = syms
-        syms = syms
-          .select(applyMerge(col("syms"), a, b).as("syms"), col("freq"))
-          .localCheckpoint(true) // vocab-sized; truncates the per-iteration lineage
-        old.unpersist()
-      }
-      it += 1
-    }
-    syms.unpersist()
-    merges.toSeq
-  }
-
   /** Code-point lexicographic string order — the order Spark's
-    * UTF8String (UTF-8 byte) comparison induces, which [[train]]'s
+    * UTF8String (UTF-8 byte) comparison induces, which the training
     * tie-break uses. Java String's natural order diverges past the BMP
     * (UTF-16 code units sort surrogates low), so spell it explicitly.
     */
@@ -155,24 +82,22 @@ object Bpe {
       }
     }
 
-  /** Dictionary-scale BPE training, in memory, bit-identical to
-    * [[train]] (property-spec'd so): same greedy argmax — pair count
-    * desc, ties on (l, r) code-point order — same left-to-right
-    * non-overlapping merge pass, same minFreq stop.
+  /** Dictionary-scale BPE training, in memory, bit-identical to the
+    * reference algorithm (property-spec'd against an independent
+    * implementation): greedy argmax — pair count desc, ties on (l, r)
+    * code-point order — left-to-right non-overlapping merge pass,
+    * minFreq stop.
     *
-    * Why it exists: [[train]] pays one Spark round-trip per merge
-    * (pair-count agg + 1-row argmax collect + checkpoint) — the right
-    * shape when the VOCABULARY doesn't fit one machine, but ~0.6 s per
-    * rule makes a production-sized table (thousands of rules) an
-    * hour-long offline job. Zipf's law says the word-frequency table is
-    * dictionary-sized at ANY corpus scale, so the offline fixture
-    * trainer collects it once (the same bounded-by-construction pattern
-    * as the IVF quantizer sample) and runs the classic incremental
-    * algorithm: a pair→containing-words index plus an ordered candidate
-    * set, so each merge touches only the words it changes — O(affected
-    * words × word length × log pairs) per rule instead of a full
-    * vocabulary pass. 8,000 merges over a 25k-word vocabulary train in
-    * seconds. [[train]] remains the unbounded-vocabulary path.
+    * Zipf's law says the word-frequency table is dictionary-sized at ANY
+    * corpus scale, so the caller collects it once (the same
+    * bounded-by-construction pattern as the IVF quantizer sample) and
+    * this runs the classic incremental algorithm: a pair→containing-words
+    * index plus an ordered candidate set, so each merge touches only the
+    * words it changes — O(affected words × word length × log pairs) per
+    * rule instead of a full vocabulary pass. 8,000 merges over a
+    * 25k-word vocabulary train in seconds; a distributed trainer paying
+    * one Spark round-trip per merge measured ~0.6 s per rule, an hour at
+    * that table size.
     */
   def trainInMemory(
       words: Seq[(String, Long)],
@@ -235,7 +160,7 @@ object Bpe {
             scala.collection.mutable.BitSet.empty).toArray
           affected.foreach { wi =>
             val s = syms(wi)
-            // left-to-right non-overlapping pass (applyMerge semantics)
+            // left-to-right non-overlapping pass (reference semantics)
             val out = scala.collection.mutable.ArrayBuffer.empty[String]
             var i = 0
             while (i < s.length) {
@@ -272,88 +197,10 @@ object Bpe {
     merges.toSeq
   }
 
-  /** Frequency-weighted adjacent-pair counts over a (syms, freq) frame. */
-  private[operators] def pairCounts(syms: DataFrame): DataFrame =
-    syms
-      .filter(size(col("syms")) >= 2)
-      .select(
-        col("freq"),
-        explode(expr(
-          "transform(sequence(0, size(syms) - 2)," +
-            " i -> struct(syms[i] AS l, syms[i + 1] AS r))")).as("p"))
-      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-      .agg(sum(col("freq")).as("cnt"))
-
-  /** One left-to-right, non-overlapping merge pass `(a, b) → ab` over a
-    * symbol array, as a Catalyst fold: state = (emitted prefix, pending
-    * symbol). A match emits the merged token and clears the pending slot,
-    * so the merged token cannot chain into the next pair within this
-    * pass — exactly the reference BPE semantics. The empty-string
-    * sentinel is safe: every symbol is a non-empty character or a prior
-    * merge of non-empty symbols.
-    */
-  private[operators] def applyMerge(syms: Column, a: String, b: String): Column = {
-    // a LITERAL empty array<string> — NOT slice(syms, 1, 0): that would
-    // reference `syms` a second time, and under [[segment]]'s nesting
-    // each layer's input is the previous layer's whole expression tree,
-    // so one extra reference per layer is a 2^depth tree blowup (96
-    // frozen merges OOM'd the driver building the plan)
-    val empty = typedlit(Seq.empty[String])
-    aggregate(
-      syms,
-      struct(empty.as("acc"), lit("").as("prev")),
-      (st, x) => {
-        val acc = st.getField("acc")
-        val prev = st.getField("prev")
-        when(prev === lit(a) && x === lit(b),
-          struct(concat(acc, array(lit(a + b))).as("acc"), lit("").as("prev")))
-          .otherwise(struct(
-            when(prev === lit(""), acc).otherwise(concat(acc, array(prev))).as("acc"),
-            x.as("prev")))
-      },
-      st =>
-        when(st.getField("prev") === lit(""), st.getField("acc"))
-          .otherwise(concat(st.getField("acc"), array(st.getField("prev")))))
-  }
-
-  /** Segment a text column with a trained merge list: chars + `</w>`,
-    * then every merge applied in training order. The merge rules are
-    * literals compiled into the expression tree — broadcast-by-construction.
-    *
-    * `chunk` bounds the expression DEPTH: every `chunk` merges the frame
-    * is eagerly localCheckpointed, so a production-sized merge table
-    * (tens of thousands of rules) compiles as many shallow expression
-    * trees instead of one tree deep enough to break codegen — the
-    * intended input here is the DICTIONARY frame (distinct words), so
-    * each checkpoint materializes a vocabulary-sized, not corpus-sized,
-    * frame.
-    */
-  def segment(
-      corpus: DataFrame,
-      textCol: String,
-      merges: Seq[(String, String)],
-      chunk: Int = 32): DataFrame = {
-    val base = baseSymsCol(col(textCol))
-    val step = math.max(1, chunk)
-    merges.grouped(step).zipWithIndex
-      .foldLeft(corpus.withColumn("bpe_tokens", base)) {
-        case (df, (grp, gi)) =>
-          val applied = df.withColumn("bpe_tokens",
-            grp.foldLeft(col("bpe_tokens")) {
-              case (c, (a, b)) => applyMerge(c, a, b)
-            })
-          // checkpoint BETWEEN chunks only (the last chunk stays lazy so
-          // trivial merge tables add no materialization at all); `step`,
-          // not raw `chunk`, so chunk<=0 doesn't eagerly pin every merge
-          if ((gi + 1) * step < merges.size) applied.localCheckpoint(true)
-          else applied
-      }
-  }
-
   /** Sequential-exact single-word segmentation under a frozen merge
     * table, with cost independent of the TABLE size: lazily evaluates
-    * the same in-order rule pass [[segment]]'s fold spells (and the
-    * DuckDB oracle replays), skipping rules whose pair cannot be
+    * the in-order rule pass the reference applies (and the DuckDB
+    * oracle replays), skipping rules whose pair cannot be
     * present. A candidate heap holds rule ranks whose pair was observed
     * adjacent in some reached state; ranks pop in ascending order (=
     * training order), each pop re-checks presence (stale candidates
@@ -362,21 +209,21 @@ object Bpe {
     * pair's smallest rank ABOVE the current one — a rule already passed
     * never re-fires, exactly the sequential semantics. Per word:
     * O(applied merges × |word| + candidates log candidates), vs the
-    * fold's O(all rules × |word|).
+    * naive pass's O(all rules × |word|).
     *
     * NOT the HuggingFace min-rank-first loop, deliberately: min-rank-
     * first diverges from in-order application when a later DIFFERENT
     * pair recreates an earlier rule's output string (e.g. rules
     * `1:(a,bc) 2:(abc,d) 3:(ab,c)` over `ab c d` — in-order yields
     * `abc d`, min-rank-first `abcd`); this repo's ground truth (the
-    * fold, the reference, the oracle) is in-order, so the fast path
-    * must be too. Property-spec'd equal to the fold on random corpora
+    * reference, the oracle) is in-order, so this path must be too.
+    * Property-spec'd equal to the per-word reference on random corpora
     * and the frozen fixture.
     *
     * `ranksOf` maps a pair to its SORTED rule ranks (a pair can in
     * principle be re-learned after re-emerging mid-training, so the
     * general form is a list). Non-BMP input is fine: [[baseSyms]]
-    * decomposes by code point, matching the Catalyst arm exactly.
+    * decomposes by code point, matching the DuckDB replay exactly.
     */
   private[operators] def segmentWordFast(
       w: String,
@@ -436,23 +283,23 @@ object Bpe {
     * id vocabulary (e.g. characters the table was never trained over)
     * encode as −1, the documented OOV convention.
     *
-    * Scale design — the same Zipf observation that makes [[train]]
-    * feasible: the corpus is NOT segmented row by row. Distinct words
-    * (vocabulary-sized) are segmented once each, then the encoded
-    * dictionary joins back to the corpus' exploded word stream and one
-    * per-document pass stitches the streams. Plan shape: one exploded
-    * corpus pass → distinct (map-side combinable) → vocabulary-sized
-    * segmentation (the expensive fold runs per TYPE, not per
-    * occurrence) → SHUFFLE_HASH dictionary join (the r11 broadcast-OOM
-    * lesson: a "small" dictionary grows with vocabulary; shuffle-hash
-    * keeps the build per-partition-sized at any corpus) → the
-    * per-document assembly as a [[SortedGroupFold.reduceGroups]]
+    * Scale design — the same Zipf observation that makes
+    * [[trainInMemory]] feasible: the corpus is NOT segmented row by
+    * row. Distinct words (vocabulary-sized) are segmented once each,
+    * then the encoded dictionary joins back to the corpus' exploded
+    * word stream and one per-document pass stitches the streams. Plan
+    * shape: one exploded corpus pass → distinct (map-side combinable) →
+    * vocabulary-sized [[segmentWordFast]] segmentation (per TYPE, not
+    * per occurrence) → SHUFFLE_HASH dictionary join (the r11
+    * broadcast-OOM lesson: a "small" dictionary grows with vocabulary;
+    * shuffle-hash keeps the build per-partition-sized at any corpus) →
+    * the per-document assembly as a [[SortedGroupFold.reduceGroups]]
     * streaming fold — NOT a `collect_list` aggregate, whose per-group
     * object buffers are untracked heap and OOM'd the 8 GB bench JVM at
     * the 200k-doc TEXTSCALE point; the fold holds exactly one
-    * document's id stream at a time over a spillable sort. The id map
-    * itself is fixture-sized (vocab of the FROZEN tokenizer, not the
-    * corpus) and compiles into the plan as a literal map.
+    * document's id stream at a time over a spillable sort. The merge
+    * table and id map are fixture-sized (the FROZEN tokenizer, not the
+    * corpus) and ride one broadcast.
     */
   def encode(
       corpus: DataFrame,
@@ -465,46 +312,24 @@ object Bpe {
       .select(col(idCol),
         posexplode(split(col(textCol), " ")).as(Seq("__pos", "__w")))
       .filter(length(col("__w")) > 0)
-    // dictionary arm: default = segmentWordFast (rule-count-independent;
-    // the fold arm pays one checkpointed dictionary pass per 32 rules —
-    // 250 Spark jobs per encode at the 8k-rule fixture). Measured at
-    // sf0.1 under the frozen 8,000-merge fixture: fold 49.3 s/encode vs
-    // 0.71 s fast (70x) — the fold's linear-in-rules job count is the
-    // scale flaw the r12 verdict predicted ("unproven past 96 rules").
-    // The fold stays config-selectable for A/B and as the all-Catalyst
-    // spelling; both are property-spec'd bit-identical.
-    val useFold =
-      spark.conf.getOption("spark.graft.bpe.foldSegment").contains("true")
-    val dict =
-      if (useFold) {
-        val (toks, ids) = idOf.toSeq.sorted.unzip
-        val idMap = map_from_arrays(
-          lit(toks.toArray), lit(ids.map(_.toLong).toArray))
-        segment(words.select(col("__w")).distinct(), "__w", merges)
-          .select(
-            col("__w"),
-            size(col("bpe_tokens")).cast("long").as("__n"),
-            array_join(
-              transform(col("bpe_tokens"),
-                t => coalesce(element_at(idMap, t), lit(-1L)).cast("string")),
-              " ").as("__ids"))
-      } else {
-        // the merge table + id vocab ride one broadcast (fixture-sized),
-        // not a per-task closure copy
-        val bc = spark.sparkContext.broadcast(
-          (merges.toIndexedSeq, mergeRanks(merges), idOf))
-        import spark.implicits._
-        words.select(col("__w")).distinct().as[String]
-          .mapPartitions { it =>
-            val (m, ranks, ids) = bc.value
-            it.map { w =>
-              val toks = segmentWordFast(w, m, ranks)
-              (w, toks.length.toLong,
-                toks.iterator
-                  .map(t => ids.getOrElse(t, -1).toString).mkString(" "))
-            }
-          }.toDF("__w", "__n", "__ids")
-      }
+    // segmentWordFast's cost is independent of the rule count. The
+    // all-Catalyst alternative (one `aggregate` fold per rule, a
+    // checkpointed dictionary pass per 32 rules) measured 49.3 s per
+    // encode vs 0.71 s at sf0.1 under the frozen 8,000-merge fixture.
+    // One broadcast, not a per-task closure copy.
+    val bc = spark.sparkContext.broadcast(
+      (merges.toIndexedSeq, mergeRanks(merges), idOf))
+    import spark.implicits._
+    val dict = words.select(col("__w")).distinct().as[String]
+      .mapPartitions { it =>
+        val (m, ranks, ids) = bc.value
+        it.map { w =>
+          val toks = segmentWordFast(w, m, ranks)
+          (w, toks.length.toLong,
+            toks.iterator
+              .map(t => ids.getOrElse(t, -1).toString).mkString(" "))
+        }
+      }.toDF("__w", "__n", "__ids")
     val joined = words
       .join(dict.hint("shuffle_hash"), Seq("__w"))
       .select(col(idCol), col("__pos"), col("__n"), col("__ids"))

@@ -108,7 +108,11 @@ object ExactSubstr {
     val input = Spread.inputBytes(df)
     val free = freeScratchBytes(spark)
     def dconf(key: String, dflt: Double): Double =
-      spark.conf.getOption(key).flatMap(_.toDoubleOption).getOrElse(dflt)
+      spark.conf.getOption(key).fold(dflt) { v =>
+        v.trim.toDoubleOption.filter(_ > 0).getOrElse(
+          throw new IllegalArgumentException(
+            s"$key must be a positive number, got '$v'"))
+      }
     val k = sizePasses(input, free,
       dconf("spark.graft.exactSubstr.scratchPerInputByte", ScratchPerInputByte),
       dconf("spark.graft.exactSubstr.scratchHeadroom", ScratchHeadroom))
@@ -127,12 +131,16 @@ object ExactSubstr {
       .map(d => new java.io.File(d).getUsableSpace).sum
   }
 
-  /** Digest-space pass count: an explicit integer conf is taken as-is
-    * (the measured dial); `auto` provisions via [[sizePasses]] against
-    * real input stats + free scratch, with a loud log of the decision
-    * and its inputs. Default 1 — auto is OPT-IN because K > 1 changes
-    * execution semantics (eager, non-reliable; see [[duplicateSpans]]),
-    * which a library must not spring on callers by disk state.
+  /** Digest-space pass count: an explicit positive integer conf is
+    * taken as-is (the measured dial); `auto` provisions via
+    * [[sizePasses]] against real input stats + free scratch, with a loud
+    * log of the decision and its inputs. Default 1 — auto is OPT-IN
+    * because K > 1 changes execution semantics (eager, non-reliable;
+    * see [[duplicateSpans]]), which a library must not spring on
+    * callers by disk state. Any
+    * other value is rejected rather than read as 1: a mistyped K would
+    * otherwise run the unbounded single shuffle the conf exists to
+    * avoid.
     */
   private def digestPasses(df: DataFrame): Int =
     df.sparkSession.conf.getOption("spark.graft.exactSubstr.passes") match {
@@ -143,7 +151,10 @@ object ExactSubstr {
             f"scratch~${ScratchPerInputByte * input / 1e9}%.1f GB at K=1, " +
             f"free=${free / 1e9}%.1f GB)")
         k
-      case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(1)
+      case Some(v) => v.trim.toIntOption.filter(_ >= 1).getOrElse(
+        throw new IllegalArgumentException(
+          "spark.graft.exactSubstr.passes must be a positive integer or " +
+            s"'auto', got '$v'"))
       case None => 1
     }
 
@@ -246,45 +257,27 @@ object ExactSubstr {
   }
 
   /** Mark stage: the (id, pos) rows whose window digest occurs ≥ 2
-    * times corpus-wide. Two spellings (r10 verdict #8 / r11 verdict #4),
-    * `spark.graft.exactSubstr.markViaAgg` selects:
+    * times corpus-wide, as a count over a digest-partitioned window —
+    * ONE corpus shuffle carries the whole decision; the window exec
+    * sorts each partition by the 16-byte digest.
     *
-    *  - `window` (default): count over a digest-partitioned window —
-    *    ONE corpus shuffle carries the whole decision; the window exec
-    *    sorts each partition by the 16-byte digest.
-    *  - `agg`: map-side-combinable count per digest → filter ≥ 2 →
-    *    semi-join back. No corpus-sized sort — but the corpus pays a
-    *    SECOND pass (the join arm re-reads every window row) and the
-    *    dup-digest build side is only small when duplication is rare.
-    *
-    * Measured, r12, interleaved processes under right-sized shuffles
-    * (AQE initialPartitionNum = 8× cores — the r11 A/B ran 32-wide
-    * where BOTH arms spilled, read agg ahead within noise, and does not
-    * reproduce): 200k docs / ~49M windows: q133 window 20.9 s vs agg
-    * 23.3 s; 500k / ~123M: 47.3 s vs 58.4 s — window wins and the gap
-    * WIDENS with scale on this corpus, whose Zipf text duplicates a
-    * large fraction of digests (the join arm's build side is
-    * corpus-fraction-sized, nothing is broadcastable). The agg spelling
-    * stays selectable for low-duplication corpora (boilerplate ≪ 1% of
-    * windows), where its build side collapses to broadcast size and the
-    * second scan is the only cost.
+    * The alternative, a map-side-combinable count per digest → filter
+    * ≥ 2 → semi-join back, avoids the corpus-sized sort but pays a
+    * SECOND corpus pass (the join re-reads every window row). Measured,
+    * r12, interleaved processes under right-sized shuffles (AQE
+    * initialPartitionNum = 8× cores — the r11 A/B ran 32-wide where BOTH
+    * arms spilled, read agg ahead within noise, and does not reproduce):
+    * 200k docs / ~49M windows: q133 window 20.9 s vs agg 23.3 s; 500k /
+    * ~123M: 47.3 s vs 58.4 s — window wins and the gap WIDENS with scale
+    * on this corpus, whose Zipf text duplicates a large fraction of
+    * digests (the join's build side is corpus-fraction-sized, nothing is
+    * broadcastable).
     */
-  private def markDuplicated(wins: DataFrame): DataFrame = {
-    val viaAgg =
-      try wins.sparkSession.conf.get("spark.graft.exactSubstr.markViaAgg").toBoolean
-      catch { case _: java.util.NoSuchElementException => false }
-    if (viaAgg) {
-      val dupH = wins.groupBy(col("__h"))
-        .agg(count(lit(1)).as("__cnt"))
-        .filter(col("__cnt") >= 2)
-        .select(col("__h"))
-      wins.join(dupH, Seq("__h"), "left_semi").select(col("__id"), col("pos"))
-    } else
-      wins
-        .withColumn("__cnt", count(lit(1)).over(Window.partitionBy(col("__h"))))
-        .filter(col("__cnt") >= 2)
-        .select(col("__id"), col("pos"))
-  }
+  private def markDuplicated(wins: DataFrame): DataFrame =
+    wins
+      .withColumn("__cnt", count(lit(1)).over(Window.partitionBy(col("__h"))))
+      .filter(col("__cnt") >= 2)
+      .select(col("__id"), col("pos"))
 
   /** The APPLY stage (Lee et al. §3: remove duplicated text, keep one
     * copy): the deduplicated corpus `(id, text_dedup, n_spans_cut,
@@ -326,49 +319,28 @@ object ExactSubstr {
     require(L >= 2, s"minLen must be >= 2, got $L")
     val wins = windowDigests(df, idCol, textCol, L)
     // Keeper decision — duplicated at all (count ≥ 2) and keeper
-    // (min (id, pos)) — in the same two spellings as [[markDuplicated]],
-    // selected by the same `spark.graft.exactSubstr.markViaAgg` conf
-    // (r11 verdict #4 asked for the agg respell of the keeper rank; it
-    // exists below and was A/B'd — and the WINDOW spelling won):
+    // (min (id, pos)) — as count + row_number over the digest window:
+    // ONE corpus shuffle carries both decisions. The agg respell
+    // ((count, min-struct) per digest → filter ≥ 2 → join back) was
+    // A/B'd, r12, interleaved under right-sized shuffles (see
+    // markDuplicated): q134 200k: window 23.5 s vs agg 28.9 s; 500k:
+    // 57.4 s vs 116.8 s. Its keeper join re-shuffles all ~123M window
+    // rows against a corpus-fraction-sized build (this corpus
+    // duplicates a large share of digests) and loses 2× at the upper
+    // decade.
     //
-    //  - window (default): count + row_number over the digest window —
-    //    ONE corpus shuffle carries both decisions. Measured r12,
-    //    interleaved under right-sized shuffles (see markDuplicated):
-    //    q134 200k: window 23.5 s vs agg 28.9 s; 500k: 57.4 s vs
-    //    116.8 s. The agg arm's keeper join re-shuffles all ~123M
-    //    window rows against a corpus-fraction-sized build (this
-    //    corpus duplicates a large share of digests) and loses 2× at
-    //    the upper decade.
-    //  - agg: (count, min-struct) per digest → filter ≥ 2 → join back,
-    //    keeping non-keeper occurrences — the right spelling only for
-    //    low-duplication corpora where the build side broadcasts.
-    val viaAgg =
-      try df.sparkSession.conf.get("spark.graft.exactSubstr.markViaAgg").toBoolean
-      catch { case _: java.util.NoSuchElementException => false }
     // keeper + cut are per-DIGEST decisions, so they slice cleanly into
     // digest-space passes (multiPass): every occurrence of a window is
     // in the same pass as its keeper
-    def cutStage(w: DataFrame): DataFrame =
-      if (viaAgg) {
-        val keep = w.groupBy(col("__h"))
-          .agg(
-            count(lit(1)).as("__cnt"),
-            min(struct(col("__id"), col("pos"))).as("__keep"))
-          .filter(col("__cnt") >= 2)
-          .select(col("__h"), col("__keep"))
-        w.join(keep, Seq("__h"))
-          .filter(
-            col("__id") =!= col("__keep.__id") || col("pos") =!= col("__keep.pos"))
-          .select(col("__id"), col("pos"))
-      } else {
-        val byDigest = Window.partitionBy(col("__h"))
-        w
-          .withColumn("__cnt", count(lit(1)).over(byDigest))
-          .withColumn("__rk",
-            row_number().over(byDigest.orderBy(col("__id"), col("pos"))))
-          .filter(col("__cnt") >= 2 && col("__rk") > 1)
-          .select(col("__id"), col("pos"))
-      }
+    def cutStage(w: DataFrame): DataFrame = {
+      val byDigest = Window.partitionBy(col("__h"))
+      w
+        .withColumn("__cnt", count(lit(1)).over(byDigest))
+        .withColumn("__rk",
+          row_number().over(byDigest.orderBy(col("__id"), col("pos"))))
+        .filter(col("__cnt") >= 2 && col("__rk") > 1)
+        .select(col("__id"), col("pos"))
+    }
     val cut = multiPass(wins, digestPasses(df))(cutStage)
     val byDoc = Window.partitionBy(col("__id")).orderBy(col("pos"))
     val spans = cut

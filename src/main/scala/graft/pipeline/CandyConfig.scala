@@ -55,6 +55,17 @@ object CandyConfig {
   def fromEnv(env: Map[String, String] = sys.env): CandyConfig = {
     def get(k: String, default: String): String =
       env.get(k).filter(_.nonEmpty).getOrElse(default)
+    // only true/false (any case): a typo such as `yes` must not silently
+    // pick the other allocation mode or source
+    def flag(k: String): Boolean = {
+      val v = get(k, "false")
+      v.toLowerCase match {
+        case "true" => true
+        case "false" => false
+        case _ => throw new IllegalArgumentException(
+          s"$k must be true or false, got '$v'")
+      }
+    }
     CandyConfig(
       dataDir = get("CANDY_DATA_DIR", "data"),
       outputPath = get("OUTPUT_PATH", "data/output"),
@@ -77,8 +88,7 @@ object CandyConfig {
       datasetNumber = get("DATASET_NUMBER", ""),
       customersTable = get("CUSTOMERS_TABLE", "customers"),
       productsTable = get("PRODUCTS_TABLE", "products"),
-      reloadInventoryDaily =
-        get("RELOAD_INVENTORY_DAILY", "false").toLowerCase == "true",
-      mongoEnabled = get("MONGO_ENABLED", "false").toLowerCase == "true")
+      reloadInventoryDaily = flag("RELOAD_INVENTORY_DAILY"),
+      mongoEnabled = flag("MONGO_ENABLED"))
   }
 }

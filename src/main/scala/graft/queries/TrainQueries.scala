@@ -697,13 +697,14 @@ object TrainQueries {
     * `replace` scans left-to-right non-overlapping, each match consumes
     * exactly one separator of each flanking double pair — so adjacent
     * matches stay matchable and a merged token cannot re-pair within
-    * the same rule: precisely the non-chaining single-pass fold
-    * semantics of [[graft.operators.Bpe.applyMerge]] (property-spec'd
-    * equal in `BpeSpec`). The boundary separators make every pattern
-    * anchor to WHOLE symbols (`#l#` cannot match a symbol that merely
-    * ends or begins with `l`). `#` never occurs in corpus tokens
-    * (alphabet [a-z0-9]; words split on spaces) — an oracle-side
-    * assumption only, the Scala operator works on symbol arrays.
+    * the same rule: precisely the non-chaining single-pass semantics
+    * of [[graft.operators.Bpe.segmentWordFast]] (property-spec'd
+    * against a per-word reference in `BpeSpec`). The boundary
+    * separators make every pattern anchor to WHOLE symbols (`#l#`
+    * cannot match a symbol that merely ends or begins with `l`). `#`
+    * never occurs in corpus tokens (alphabet [a-z0-9]; words split on
+    * spaces) — an oracle-side assumption only, the Scala operator works
+    * on symbol arrays.
     *
     * `src` parameterizes the corpus CTE the encode replays over
     * (default the raw `documents` table; q150 feeds the curated
@@ -730,7 +731,7 @@ object TrainQueries {
     val lastC = s"bpe_c${chunks.size - 1}"
     val vocabRows = graft.model.BpeMerges.idOf.toSeq.sorted
       .map { case (t, i) => s"('$t', $i)" }.mkString(", ")
-    // byte-fallback base decomposition (mirrors Bpe.baseSymsCol): an
+    // byte-fallback base decomposition (mirrors Bpe.charSyms): an
     // alphabet char is its own symbol; anything else expands to its
     // UTF-8 bytes as '<0xNN>' tokens — hex() is uppercase on both
     // engines, so the token spellings agree. Up to 4 bytes per char

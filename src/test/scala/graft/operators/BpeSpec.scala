@@ -3,8 +3,9 @@ package graft.operators
 import graft.SparkTestBase
 import org.scalatest.funsuite.AnyFunSuite
 
-/** BPE trainer pinned against an INDEPENDENT in-memory implementation —
-  * plain Scala maps and string ops, sharing no code with the Spark path.
+/** BPE trainer and encoder pinned against INDEPENDENT in-memory
+  * references — plain Scala maps and string ops, sharing no code with
+  * the operator.
   */
 class BpeSpec extends AnyFunSuite with SparkTestBase {
 
@@ -88,39 +89,21 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
     merges.toSeq
   }
 
-  private def corpusDf(texts: Seq[String]) = {
-    import spark.implicits._
-    texts.toDF("text")
-  }
-
-  test("train matches the reference implementation on a hand corpus") {
-    val texts = Seq(
+  test("trainInMemory is bit-identical to the reference across a hand " +
+    "corpus, seeded random corpora, overlap runs, deep merges, and the " +
+    "real sf0.001 vocabulary") {
+    // the classic hand corpus (low/lower/newest/widest)
+    val hand = Seq(
       "low low low low low",
       "lower lower newest newest newest newest newest newest",
       "widest widest widest",
       "low lower newest")
-    val vocab = Bpe.wordFreq(corpusDf(texts), "text")
-    val words = texts.flatMap(_.split(" ")).filter(_.nonEmpty)
+      .flatMap(_.split(" ")).filter(_.nonEmpty)
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val got = Bpe.train(vocab, numMerges = 10, minFreq = 2L)
-    val want = referenceBpe(words, numMerges = 10, minFreq = 2L)
-    assert(got == want, s"merge sequences diverge:\n got $got\nwant $want")
-    assert(got.nonEmpty)
-  }
-
-  test("train matches the reference on real documents (sf0.001)") {
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val vocab = Bpe.wordFreq(docs, "text")
-    import spark.implicits._
-    val words = vocab.as[(String, Long)].collect().toMap
-    val got = Bpe.train(vocab, numMerges = 8, minFreq = 2L)
-    val want = referenceBpe(words, numMerges = 8, minFreq = 2L)
-    assert(got == want, s"merge sequences diverge:\n got $got\nwant $want")
-    assert(got.length == 8)
-  }
-
-  test("trainInMemory is bit-identical to the reference (and thus to " +
-    "train) across seeded random corpora, overlap runs, and deep merges") {
+    val handGot = Bpe.trainInMemory(hand.toSeq, 10, minFreq = 2L)
+    assert(handGot.nonEmpty)
+    assert(handGot == referenceBpe(hand, 10, minFreq = 2L),
+      s"hand corpus diverges: $handGot")
     val rng = new scala.util.Random(13)
     for (trial <- 1 to 4) {
       // random words incl. repeated-char runs (the overlap case the
@@ -138,26 +121,14 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
       assert(got == want,
         s"trial $trial diverges at ${got.zip(want).indexWhere(p => p._1 != p._2)}")
     }
-    // and against the DISTRIBUTED trainer on a real corpus (transitive
-    // equality train == reference == trainInMemory, asserted directly)
+    // and on the real sf0.001 vocabulary, built by the operator's own
+    // word-frequency pass
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val vocab = Bpe.wordFreq(docs, "text")
     import spark.implicits._
-    val words = vocab.as[(String, Long)].collect().toSeq
-    assert(Bpe.trainInMemory(words, 12, 2L) == Bpe.train(vocab, 12, 2L))
-  }
-
-  test("applyMerge is left-to-right non-overlapping (the aaa case)") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // "aaa</w>" under merge (a,a): [aa, a, </w>], NOT [a, aa, </w>]
-    // and never [aa, aa...] chaining into the merged token
-    val df = Seq(Seq("a", "a", "a", "</w>"), Seq("a", "a", "a", "a", "</w>"))
-      .toDF("syms")
-    val out = df.select(Bpe.applyMerge(col("syms"), "a", "a").as("m"))
-      .as[Seq[String]].collect()
-    assert(out(0) == Seq("aa", "a", "</w>"))
-    assert(out(1) == Seq("aa", "aa", "</w>"))
+    val words = Bpe.wordFreq(docs, "text").as[(String, Long)].collect().toSeq
+    val real = Bpe.trainInMemory(words, 12, 2L)
+    assert(real.length == 12)
+    assert(real == referenceBpe(words.toMap, 12, 2L))
   }
 
   /** Reference single-word encode: chars + marker, every merge applied
@@ -205,8 +176,8 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("segmentWordFast equals the fold and the per-word reference on " +
-    "random corpora, recreated-pair traps, and the frozen fixture") {
+  test("segmentWordFast equals the per-word reference on random " +
+    "corpora, recreated-pair traps, and the frozen fixture") {
     // the divergence trap: rules 1:(a,bc) 2:(abc,d) 3:(ab,c) over
     // "abcd" — in-order must yield [abc, d</w>... ] shapes, never the
     // min-rank-first "abcd"
@@ -216,6 +187,13 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
     for (w <- Seq("abcd", "aabcd", "abcabcd", "xabcdx"))
       assert(Bpe.segmentWordFast(w, trap, trapRanks).toSeq == viaRef(w, trap),
         s"trap diverges on $w")
+    // left-to-right non-overlapping (the aaa case): "aaa" under (a,a) is
+    // [aa, a, </w>], not [a, aa, </w>], and a merged token never chains
+    val aa = IndexedSeq(("a", "a"))
+    assert(Bpe.segmentWordFast("aaa", aa, Bpe.mergeRanks(aa)).toSeq ==
+      Seq("aa", "a", "</w>"))
+    assert(Bpe.segmentWordFast("aaaa", aa, Bpe.mergeRanks(aa)).toSeq ==
+      Seq("aa", "aa", "</w>"))
     // seeded random rule tables + words, incl. repeated-char runs
     val rng = new scala.util.Random(29)
     for (_ <- 1 to 30) {
@@ -290,26 +268,6 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
     assert(got.nonEmpty)
   }
 
-  test("segment applies trained merges and reassembles to the original text") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val texts = Seq("low lower", "newest", "")
-    val merges = Seq(("e", "s"), ("es", "t"), ("l", "o"), ("lo", "w"))
-    val out = Bpe.segment(corpusDf(texts).withColumn("w", col("text")), "w", merges)
-      .select(col("w"), col("bpe_tokens")).as[(String, Seq[String])].collect()
-    out.foreach { case (w, toks) =>
-      assert(toks.last == "</w>" || (w.isEmpty && toks == Seq("</w>")))
-      // lossless: the tokens' byte contributions (tokenHex decodes the
-      // byte-fallback tokens the space produces) restore the text
-      val hex = toks.filterNot(_ == "</w>").map(Bpe.tokenHex).mkString
-      val bytes = hex.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
-      assert(new String(bytes, java.nio.charset.StandardCharsets.UTF_8) == w)
-    }
-    // the trained merges actually fire
-    val low = out.find(_._1 == "low lower").get._2
-    assert(low.contains("low") || low.contains("lo"))
-  }
-
   test("decode(encode(x)) reconstructs the EXACT normalized text under " +
     "byte fallback: punctuation, 2- and 3-byte UTF-8, zero OOV") {
     import spark.implicits._
@@ -335,8 +293,8 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("non-BMP input (emoji, supplementary CJK): fast encoder, fold arm, " +
-    "and reference agree on code-point byte fallback; decode is exact") {
+  test("non-BMP input (emoji, supplementary CJK): encoder and reference " +
+    "agree on code-point byte fallback; decode is exact") {
     import spark.implicits._
     val m = graft.model.BpeMerges
     // U+1F600 (4-byte emoji), U+2070E (supplementary CJK), mixed with
@@ -352,20 +310,15 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
     assert(Bpe.baseSyms("😀") ==
       Seq("<0xF0>", "<0x9F>", "<0x98>", "<0x80>"))
     assert(!Bpe.baseSyms("a𠜎b").contains("<0x3F>"))
-    // all three encode spellings agree
-    def run() = Bpe.encode(df, "doc_id", "text", m.merges.take(64), m.idOf)
+    val got = Bpe.encode(df, "doc_id", "text", m.merges.take(64), m.idOf)
       .select("doc_id", "n_tokens", "bpe_ids")
       .as[(Long, Long, String)].collect().sortBy(_._1).toSeq
-    val fast = run()
-    spark.conf.set("spark.graft.bpe.foldSegment", "true")
-    val fold = try run() finally spark.conf.unset("spark.graft.bpe.foldSegment")
-    assert(fold == fast)
     val want = texts.map { case (id, t) =>
       val toks = t.split(" ").filter(_.nonEmpty).toSeq
         .flatMap(w => refEncodeWord(w, m.merges.take(64)))
       (id, toks.size.toLong, toks.map(s => m.idOf.getOrElse(s, -1)).mkString(" "))
     }
-    assert(fast == want)
+    assert(got == want)
     // lossless decode: the emoji comes back verbatim, zero OOV
     val dec = Bpe.decode(
       Bpe.encode(df, "doc_id", "text", m.merges, m.idOf),
@@ -376,26 +329,6 @@ class BpeSpec extends AnyFunSuite with SparkTestBase {
       val expect = t.split(" ").filter(_.nonEmpty).mkString(" ")
       assert(dec(id) === ((0L, expect)), s"doc $id: '$t'")
     }
-  }
-
-  test("encode's Catalyst-fold arm (spark.graft.bpe.foldSegment) is " +
-    "bit-identical to the fast sequential encoder, including byte fallback") {
-    import spark.implicits._
-    val m = graft.model.BpeMerges
-    val df = Seq(
-      (1L, "the slow merge window"),
-      (2L, "naïve café ¡mixed! 東京 w42"),
-      (3L, "value über straße"))
-      .toDF("doc_id", "text")
-    def run() = Bpe.encode(df, "doc_id", "text", m.merges.take(64), m.idOf)
-      .select("doc_id", "n_tokens", "bpe_ids")
-      .as[(Long, Long, String)].collect().sortBy(_._1).toSeq
-    val fast = run()
-    spark.conf.set("spark.graft.bpe.foldSegment", "true")
-    try {
-      val fold = run()
-      assert(fold == fast)
-    } finally spark.conf.unset("spark.graft.bpe.foldSegment")
   }
 
   test("decode is robust to legacy -1 ids and renders them as '?'") {

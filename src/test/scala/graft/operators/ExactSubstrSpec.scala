@@ -114,22 +114,8 @@ class ExactSubstrSpec extends AnyFunSuite with SparkTestBase {
       "within-doc repeat keeps its first copy only")
   }
 
-  test("both mark spellings (window default / agg selectable) are " +
-    "bit-identical, spans and cut, on the real sf0.001 documents table") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    def all(): (Set[(Long, Long, Long, Long)], Set[(Long, String, Long, Long)]) = (
-      ExactSubstr.duplicateSpans(docs, "doc_id", "text", minLen = 50)
-        .as[(Long, Long, Long, Long)].collect().toSet,
-      ExactSubstr.cutDuplicateSpans(docs, "doc_id", "text", minLen = 50)
-        .as[(Long, String, Long, Long)].collect().toSet)
-    val win = all() // default: window
-    spark.conf.set("spark.graft.exactSubstr.markViaAgg", "true")
-    try assert(all() == win, "agg spelling diverged from window spelling")
-    finally spark.conf.unset("spark.graft.exactSubstr.markViaAgg")
-  }
-
   test("digest-space multi-pass (passes = 3) is bit-identical to " +
-    "single-pass, spans and cut, both mark spellings (sf0.001)") {
+    "single-pass, spans and cut (sf0.001)") {
     // the scratch-bound mode (r14 verdict #1): pmod(hash(digest), K)
     // slices the digest space; exactness rests on every occurrence of
     // a window sharing its digest and therefore its pass — this pins
@@ -143,13 +129,43 @@ class ExactSubstrSpec extends AnyFunSuite with SparkTestBase {
     val single = all()
     assert(single._1.nonEmpty, "fixture has no duplicates — test is vacuous")
     spark.conf.set("spark.graft.exactSubstr.passes", "3")
+    try assert(all() == single, "multi-pass diverged from single-pass")
+    finally spark.conf.unset("spark.graft.exactSubstr.passes")
+  }
+
+  test("malformed passes / scratch confs fail loudly instead of " +
+    "silently running one pass") {
+    val docs = Seq((1L, "x" * 60)).toDF("doc_id", "text")
+    val passes = "spark.graft.exactSubstr.passes"
+    def rejected(key: String, value: String)(action: => Any): String = {
+      spark.conf.set(key, value)
+      try {
+        val msg = intercept[IllegalArgumentException](action).getMessage
+        assert(msg.contains(key) && msg.contains(s"'$value'"), msg)
+        msg
+      } finally spark.conf.unset(key)
+    }
+    for (v <- Seq("3x", "0", "-2", "")) {
+      val msg = rejected(passes, v)(
+        ExactSubstr.duplicateSpans(docs, "doc_id", "text", minLen = 50))
+      assert(msg.contains("positive integer") && msg.contains("auto"), msg)
+      rejected(passes, v)(
+        ExactSubstr.cutDuplicateSpans(docs, "doc_id", "text", minLen = 50))
+    }
+    for (key <- Seq("spark.graft.exactSubstr.scratchPerInputByte",
+        "spark.graft.exactSubstr.scratchHeadroom");
+      v <- Seq("lots", "0", "-0.5"))
+      rejected(key, v)(ExactSubstr.autoPassDecision(docs))
+    // the accepted forms still parse
+    spark.conf.set(passes, " 2 ")
+    spark.conf.set("spark.graft.exactSubstr.scratchHeadroom", "0.5")
     try {
-      assert(all() == single, "multi-pass diverged from single-pass")
-      spark.conf.set("spark.graft.exactSubstr.markViaAgg", "true")
-      try assert(all() == single,
-        "multi-pass agg spelling diverged from single-pass")
-      finally spark.conf.unset("spark.graft.exactSubstr.markViaAgg")
-    } finally spark.conf.unset("spark.graft.exactSubstr.passes")
+      ExactSubstr.duplicateSpans(docs, "doc_id", "text", minLen = 50)
+      ExactSubstr.autoPassDecision(docs)
+    } finally {
+      spark.conf.unset(passes)
+      spark.conf.unset("spark.graft.exactSubstr.scratchHeadroom")
+    }
   }
 
   test("sizePasses: both regimes of the scratch provisioning rule, " +

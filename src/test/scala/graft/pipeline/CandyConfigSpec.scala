@@ -85,6 +85,23 @@ class CandyConfigSpec extends AnyFunSuite {
     assert(opts("collection") == "tx_20240204")
   }
 
+  test("boolean flags accept only true/false (any case); anything else " +
+    "is rejected naming the variable") {
+    for (k <- Seq("RELOAD_INVENTORY_DAILY", "MONGO_ENABLED")) {
+      assert(CandyConfig.fromEnv(Map(k -> "False")) == CandyConfig.fromEnv(Map.empty))
+      assert(CandyConfig.fromEnv(Map(k -> "")) == CandyConfig.fromEnv(Map.empty))
+      for (bad <- Seq("yes", "1", "on", "ture", " true")) {
+        val e = intercept[IllegalArgumentException](
+          CandyConfig.fromEnv(Map(k -> bad)))
+        assert(e.getMessage.contains(k) && e.getMessage.contains(s"'$bad'"),
+          e.getMessage)
+      }
+    }
+    assert(CandyConfig.fromEnv(Map("RELOAD_INVENTORY_DAILY" -> "tRuE"))
+      .reloadInventoryDaily)
+    assert(CandyConfig.fromEnv(Map("MONGO_ENABLED" -> "TRUE")).mongoTransactions)
+  }
+
   test("empty-string env values fall back to defaults (reference get-or-default)") {
     val c = CandyConfig.fromEnv(Map("MYSQL_URL" -> "", "PRODUCTS_TABLE" -> ""))
     assert(!c.jdbcDims)
